@@ -17,13 +17,18 @@ SF = "/root/testdata/sf0.001"
 
 PICKS = {
     "pricing_summary": (
-        "Scan-side date filter pushed to parquet; two HashAggregates (partial "
-        "map-side combine, final after ONE exchange on the 6-value group key)."
+        "Scan-side date filter pushed to parquet; a round-robin fan-out "
+        "exchange (sources.tables.fan_out) spreads the one-file 1x scan over "
+        "every slot (a no-op on a multi-file corpus); two HashAggregates "
+        "(partial map-side combine, final after ONE hash exchange on the "
+        "6-value group key)."
     ),
     "revenue_by_nation": (
         "partial-agg pushdown: lineitem collapses to one decimal partial per "
         "orderkey BELOW the joins, so the joins move ~|orders| rows, not "
-        "~|lineitem|; nation broadcast; nation-level re-sum is exact (decimal)."
+        "~|lineitem|; the keyed fan-out on l_orderkey (sources.tables.fan_out) "
+        "is that aggregate's only exchange, so partial and final run in one "
+        "partitioning; nation broadcast; nation-level re-sum is exact (decimal)."
     ),
     "top_customers": (
         "TakeOrderedAndProject — per-partition heaps, driver merges k rows; "
@@ -252,7 +257,9 @@ PICKS = {
     "dsir_importance_weights": (
         "DSIR data selection in ONE tokenize/hash pass: the (doc, lang, "
         "bucket) partial feeds both the scoring leg and the 64-bucket "
-        "model — AQE ReuseExchange dedups the two copies at runtime "
+        "model — each copy fans the one-file 1x scan out round-robin "
+        "(sources.tables.fan_out) before tokenizing, and AQE ReuseExchange "
+        "dedups the two copies at runtime "
         "(static plan shows both; executed plan scans once); totals are "
         "a window over the 64-row model; only the 64-row ratio table "
         "broadcasts."
