@@ -176,28 +176,15 @@ def char_jaccard_pairs(
     )
 
 
-def _salted_hash(seed: int, hash_fn: str = "md5"):
-    """Two hash tiers: 'md5' (60-bit BIGINT from the md5 hex prefix —
-    portable, DuckDB oracles replay it exactly via CAST('0x'||substr))
-    and 'xxhash64' (native 64-bit long — ~2x faster hashing). BOTH tiers
-    min over fixed-width longs, so the signature aggregate stays a
-    HashAggregate; a hex-string min here would demote the grouped agg to
-    SortAggregate and sort every exploded shingle row per partition."""
-    if hash_fn == "md5":
-        return lambda col: F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(f"mh{seed}:"), col).cast("binary")), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
-    return lambda col: F.xxhash64(F.lit(f"mh{seed}:"), col)
-
-
 def _salted_hash_sql(seed: int, hash_fn: str, col: str = "s") -> str:
-    """SQL spelling of _salted_hash — expression-identical (same
-    functions, same literals), used by the one-statement builders
-    below. Keep the two spellings in sync."""
+    """Salted per-seed shingle hash as a SQL expression, used by the
+    one-statement builders below. Two hash tiers: 'md5' (60-bit BIGINT
+    from the md5 hex prefix — portable, DuckDB oracles replay it
+    exactly via CAST('0x'||substr)) and 'xxhash64' (native 64-bit long
+    — ~2x faster hashing). BOTH tiers min over fixed-width longs, so
+    the signature aggregate stays a HashAggregate; a hex-string min
+    here would demote the grouped agg to SortAggregate and sort every
+    exploded shingle row per partition."""
     if hash_fn == "md5":
         return (
             f"CAST(conv(substring(md5(CAST(concat('mh{seed}:', {col}) "
@@ -252,7 +239,7 @@ def minhash_lsh_pairs(
     band-bucket digest — uniform shuffle keys). Estimated jaccard =
     fraction of matching signature components.
     ``hash_fn``: 'md5' = oracle-replayable tier; 'xxhash64' = production
-    tier (~2x faster; see _salted_hash).
+    tier (~2x faster; see _salted_hash_sql).
     ``persist_signatures``: the signature relation feeds three consumers
     (banding + both sides of the rescore join); recomputing it triples
     the shingle-explode cost (measured ~3x wall on the K=64 bench
