@@ -244,25 +244,77 @@ def _env_stamp(spark, sf_dir: str) -> dict:
     except OSError:
         stamp["mem_available_gb"] = None
     reg = load_table(spark, sf_dir, "region")
-    for _ in range(CAL_WARM):
-        reg.count()  # untimed: saturate JVM/scheduler warm-up first
-    samples = []
-    for _ in range(CAL_RUNS):
-        t0 = time.perf_counter()
-        reg.count()
-        samples.append(time.perf_counter() - t0)
-    med = statistics.median(samples)
+    # CAL_WARM untimed counts saturate JVM/scheduler warm-up first
+    med, mad = _median_mad(_samples(reg.count, CAL_RUNS, warmups=CAL_WARM))
     stamp["calibration_count_sec"] = round(med, 4)
-    stamp["calibration_mad_sec"] = round(
-        statistics.median(abs(s - med) for s in samples), 4
-    )
+    stamp["calibration_mad_sec"] = round(mad, 4)
     stamp["calibration_runs"] = CAL_RUNS
     return stamp
 
 
+def _samples(act, runs: int, warmups: int = 1) -> list[float]:
+    """Wall times of ``runs`` calls of ``act()``, after ``warmups``
+    untimed calls (the first run of a plan pays codegen). The one
+    warm-up-then-time loop behind every median the bench and the
+    tools report."""
+    for _ in range(warmups):
+        act()
+    samples = []
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        act()
+        samples.append(time.perf_counter() - t0)
+    return samples
+
+
+def _median_time(act, runs: int) -> float:
+    return statistics.median(_samples(act, runs))
+
+
+def _median_mad(xs: list[float]) -> tuple[float, float]:
+    med = statistics.median(xs)
+    return med, statistics.median(abs(x - med) for x in xs)
+
+
+def interleave(act_a, act_b, pairs: int, warmups: int, before=None) -> dict:
+    """Same-session A/B timing in ABBA order. Both variants get
+    ``warmups`` untimed calls (A then B); then ``pairs`` timed pairs
+    run A,B / B,A / A,B ... so linear host drift cancels within as
+    well as across pairs. ``before`` (e.g. a cache clear) runs untimed
+    ahead of every timed call. Returns the per-variant samples and the
+    per-pair ratios t_A / t_B with their median and MAD — the
+    statistic of record, since host state wide enough to move one side
+    of a pair moves the adjacent run the same way and divides out."""
+    for _ in range(warmups):
+        act_a()
+        act_b()
+    a_s, b_s = [], []
+    for i in range(pairs):
+        legs = ((act_a, a_s), (act_b, b_s))
+        for act, out in legs if i % 2 == 0 else legs[::-1]:
+            if before is not None:
+                before()
+            out += _samples(act, 1, warmups=0)
+    ratios = [a / b for a, b in zip(a_s, b_s)]
+    med, mad = _median_mad(ratios)
+    return {"a": a_s, "b": b_s, "ratios": ratios, "ratio_median": med, "ratio_mad": mad}
+
+
+def _build_once(out: str, key: str, build) -> str:
+    """Run ``build()`` to fill ``out`` unless ``out/_MARKER`` already
+    holds ``key`` (source + shape of the corpus), so re-runs reuse an
+    identical corpus instead of rebuilding it. Returns ``out``."""
+    marker = os.path.join(out, "_MARKER")
+    if os.path.exists(marker) and open(marker).read() == key:
+        return out
+    build()
+    with open(marker, "w") as f:
+        f.write(key)
+    return out
+
+
 def _scale_dir(spark, sf_dir: str) -> str:
-    """Build (or reuse — marker-file keyed on source + copies) the
-    inflated corpus under /tmp."""
+    """Build (or reuse) the inflated corpus under /tmp."""
     from comperhensive_bigdata_analysis__spark.sources.inflate import (
         PASSTHROUGH,
         inflate_corpus,
@@ -270,14 +322,13 @@ def _scale_dir(spark, sf_dir: str) -> str:
 
     tag = os.path.basename(sf_dir.rstrip("/"))
     out = f"/tmp/cba_bench_{tag}_x{SCALE_COPIES}"
-    marker = os.path.join(out, "_MARKER")
-    want = f"{sf_dir}|{SCALE_COPIES}"
-    if os.path.exists(marker) and open(marker).read() == want:
-        return out
-    inflate_corpus(spark, sf_dir, out, SCALE_COPIES, passthrough=PASSTHROUGH)
-    with open(marker, "w") as f:
-        f.write(want)
-    return out
+    return _build_once(
+        out,
+        f"{sf_dir}|{SCALE_COPIES}",
+        lambda: inflate_corpus(
+            spark, sf_dir, out, SCALE_COPIES, passthrough=PASSTHROUGH
+        ),
+    )
 
 
 def main() -> None:
@@ -301,24 +352,17 @@ def main() -> None:
     runs_1x = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
     runs_scale = int(os.environ.get("SPARK_GRAFT_BENCH_SCALE_RUNS", "3"))
 
-    def _median_time(fn, data_dir: str, runs: int) -> float:
-        fn(spark, data_dir).collect()  # untimed codegen/compile warm-up
-        samples = []
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            fn(spark, data_dir).collect()
-            samples.append(time.perf_counter() - t0)
-        return statistics.median(samples)
+    def _collect(fn, data_dir: str):
+        return lambda: fn(spark, data_dir).collect()
 
     timings: dict[str, float] = {}
     for name, fn in HEADLINE.items():
-        timings[name] = round(_median_time(fn, sf_dir, runs_1x), 3)
+        timings[name] = round(_median_time(_collect(fn, sf_dir), runs_1x), 3)
 
     big = _scale_dir(spark, sf_dir)  # untimed corpus build (cached)
     for name in SCALE_TIER:
-        fn = HEADLINE[name]
         timings[f"{name}@{SCALE_COPIES}x"] = round(
-            _median_time(fn, big, runs_scale), 3
+            _median_time(_collect(HEADLINE[name], big), runs_scale), 3
         )
 
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")

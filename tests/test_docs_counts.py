@@ -46,7 +46,7 @@ def test_scan_reuse_executed_rows_not_stale():
     and fails when a listed plan (or any package-local helper in its
     call closure) changed after the audit ran — the same staleness
     contract test_artifact_rows_not_stale enforces for
-    CORRECTNESS_FULL.json. Fix = rerun tools/scan_reuse_audit.py."""
+    CORRECTNESS_FULL.json. Fix = rerun tools/scan_audit_wide.py."""
     import json
     import sys
 
@@ -65,7 +65,7 @@ def test_scan_reuse_executed_rows_not_stale():
     }
     assert not stale, (
         f"SCAN_REUSE.md executed rows are pre-change for {sorted(stale)}; "
-        f"rerun tools/scan_reuse_audit.py"
+        f"rerun tools/scan_audit_wide.py"
     )
     # every stamped name must still exist (a renamed/dropped plan makes
     # the row meaningless)

@@ -43,7 +43,6 @@ import json
 import os
 import statistics
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -66,34 +65,24 @@ def _timer(mode: str):
 
 
 def run_ab(spark, mod, data_dir: str, pairs: int, warmups: int) -> dict:
+    import bench
+
     timed = _timer(getattr(mod, "TIMED", "collect"))
-    va = lambda: timed(mod.variant_a(spark, data_dir))
-    vb = lambda: timed(mod.variant_b(spark, data_dir))
-    for _ in range(warmups):
-        va()
-        vb()
-    a_s, b_s, ratios = [], [], []
-    for i in range(pairs):
-        first, second = (va, vb) if i % 2 == 0 else (vb, va)
-        t0 = time.perf_counter()
-        first()
-        t1 = time.perf_counter()
-        second()
-        t2 = time.perf_counter()
-        ta, tb = (t1 - t0, t2 - t1) if i % 2 == 0 else (t2 - t1, t1 - t0)
-        a_s.append(ta)
-        b_s.append(tb)
-        ratios.append(ta / tb)
-    med = statistics.median(ratios)
+    r = bench.interleave(
+        lambda: timed(mod.variant_a(spark, data_dir)),
+        lambda: timed(mod.variant_b(spark, data_dir)),
+        pairs,
+        warmups,
+    )
     return {
         "pairs": pairs,
         "warmups": warmups,
         "timed": getattr(mod, "TIMED", "collect"),
-        "a_median_sec": round(statistics.median(a_s), 3),
-        "b_median_sec": round(statistics.median(b_s), 3),
-        "speedup_median": round(med, 3),
-        "speedup_mad": round(statistics.median(abs(r - med) for r in ratios), 3),
-        "ratios": [round(r, 3) for r in ratios],
+        "a_median_sec": round(statistics.median(r["a"]), 3),
+        "b_median_sec": round(statistics.median(r["b"]), 3),
+        "speedup_median": round(r["ratio_median"], 3),
+        "speedup_mad": round(r["ratio_mad"], 3),
+        "ratios": [round(x, 3) for x in r["ratios"]],
     }
 
 

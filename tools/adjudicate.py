@@ -11,8 +11,9 @@ BENCH_NOTES r11). tools/crossover_matrix.py solved the same problem
 with strict A/B interleaving; this tool applies that discipline to
 FLAG adjudication:
 
-- the FLAGged plan is timed STRICTLY ALTERNATED with a stable ANCHOR
-  plan (default q7_exact_dedup: one uniform-key shuffle, never
+- the FLAGged plan is timed interleaved with a stable ANCHOR plan in
+  bench.interleave's ABBA order (plan, anchor / anchor, plan, ...)
+  (default anchor q7_exact_dedup: one uniform-key shuffle, never
   FLAGged, committed 0.241-0.352s in 10 of 11 rounds — the one
   outlier, r9's 0.593, was the round-wide host event in which every
   row doubled, which a ratio cancels by construction) under the
@@ -63,7 +64,6 @@ import os
 import re
 import statistics
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -174,24 +174,16 @@ def adjudicate(
     plan_dir = scale_dir if plan_scaled else sf_dir
     anchor_dir = scale_dir if anchor_scaled else sf_dir
 
-    for _ in range(warmups):  # untimed: codegen + the JIT depth the
-        anchor_fn(spark, anchor_dir).collect()  # bench's warm medians assume
-        plan_fn(spark, plan_dir).collect()
-
-    ratios, plan_s, anchor_s = [], [], []
-    for _ in range(cycles):
-        t0 = time.perf_counter()
-        anchor_fn(spark, anchor_dir).collect()
-        ta = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        plan_fn(spark, plan_dir).collect()
-        tp = time.perf_counter() - t0
-        anchor_s.append(ta)
-        plan_s.append(tp)
-        ratios.append(tp / ta)
-
-    med = statistics.median(ratios)
-    mad = statistics.median(abs(r - med) for r in ratios)
+    # warm-ups (untimed: codegen + the JIT depth the bench's warm
+    # medians assume), then ABBA cycles; ratio = plan / anchor
+    r = bench.interleave(
+        lambda: plan_fn(spark, plan_dir).collect(),
+        lambda: anchor_fn(spark, anchor_dir).collect(),
+        cycles,
+        warmups,
+    )
+    med, mad = r["ratio_median"], r["ratio_mad"]
+    plan_s, anchor_s = r["a"], r["b"]
     committed = _committed_ratios(plan_name, anchor_name)
     live_abs = statistics.median(plan_s)
     old_art = committed[0][0]

@@ -14,8 +14,8 @@ replications of the consumed table at 1x/8x/64x
 (key-CONSTANT growth: lang and source are untouched, so per-key mass
 grows with the data — exactly the case the scan shapes exist for) and
 timing the production scan shape against the bare-window shape it
-replaced, INTERLEAVED median-of-5 cold (strictly alternating A/B
-runs — this host's intermittent contention phases moved identical
+replaced, INTERLEAVED median-of-5 cold (A/B runs in
+bench.interleave's ABBA order — this host's intermittent contention phases moved identical
 code 2-4x between back-to-back runs, so only interleaving keeps the
 comparison valid; spark.catalog.clearCache() before every timed run,
 so the production shapes' lazy persists are PAID, not reused — same
@@ -30,13 +30,13 @@ from __future__ import annotations
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 from pyspark.sql.window import Window  # noqa: E402
 
+import bench  # noqa: E402
 from comperhensive_bigdata_analysis__spark import plans  # noqa: E402
 from comperhensive_bigdata_analysis__spark.plans.training import (  # noqa: E402
     PACK_BUDGET,
@@ -52,47 +52,23 @@ N_FILES = 16
 RUNS = 5
 
 
-def _replicate_docs(spark, mult: int) -> str:
-    out = f"/tmp/crossover_docs_x{mult}"
-    marker = os.path.join(out, "_MARKER")
-    want = f"{BASE}|{mult}"
-    if os.path.exists(marker) and open(marker).read() == want:
-        return out
-    d = load_table(spark, BASE, "documents")
-    reps = d.withColumn(
-        "__j", F.explode(F.sequence(F.lit(0), F.lit(mult - 1)))
-    ).withColumn(
-        "doc_id",
-        F.col("doc_id").cast("long") + F.col("__j").cast("long") * F.lit(STRIDE),
-    ).drop("__j")
-    reps.repartition(N_FILES).write.mode("overwrite").parquet(
-        f"{out}/documents.parquet"
-    )
-    with open(marker, "w") as f:
-        f.write(want)
-    return out
+def _replicate(spark, table: str, key: str, mult: int) -> str:
+    """``mult`` key-shifted copies of ``table`` (``key`` + j * STRIDE),
+    built once per (source, mult) and reused."""
+    out = f"/tmp/crossover_{table}_x{mult}"
 
+    def build():
+        t = load_table(spark, BASE, table)
+        reps = t.withColumn(
+            "__j", F.explode(F.sequence(F.lit(0), F.lit(mult - 1)))
+        ).withColumn(
+            key, F.col(key).cast("long") + F.col("__j").cast("long") * F.lit(STRIDE)
+        ).drop("__j")
+        reps.repartition(N_FILES).write.mode("overwrite").parquet(
+            f"{out}/{table}.parquet"
+        )
 
-def _replicate_orders(spark, mult: int) -> str:
-    out = f"/tmp/crossover_orders_x{mult}"
-    marker = os.path.join(out, "_MARKER")
-    want = f"{BASE}|{mult}"
-    if os.path.exists(marker) and open(marker).read() == want:
-        return out
-    o = load_table(spark, BASE, "orders")
-    reps = o.withColumn(
-        "__j", F.explode(F.sequence(F.lit(0), F.lit(mult - 1)))
-    ).withColumn(
-        "o_orderkey",
-        F.col("o_orderkey").cast("long")
-        + F.col("__j").cast("long") * F.lit(STRIDE),
-    ).drop("__j")
-    reps.repartition(N_FILES).write.mode("overwrite").parquet(
-        f"{out}/orders.parquet"
-    )
-    with open(marker, "w") as f:
-        f.write(want)
-    return out
+    return bench._build_once(out, f"{BASE}|{mult}", build)
 
 
 def _wvf_window(spark, sf_dir):
@@ -198,31 +174,28 @@ def _pack_window(spark, sf_dir):
     )
 
 
-def _interleaved_cold(spark, fn_a, fn_b, sf_dir, runs=RUNS):
-    """Median-of-``runs`` cold for BOTH shapes, measured in strictly
-    alternating A/B order. This host shows intermittent multi-minute
-    contention phases that moved identical code 2-4x between
-    back-to-back runs (BENCH_NOTES r11); interleaving puts both
-    shapes inside the same phases so the COMPARISON stays valid even
-    when the absolutes drift."""
-    fn_a(spark, sf_dir).collect()  # untimed codegen warm-up
-    fn_b(spark, sf_dir).collect()
-    a_s, b_s = [], []
-    for _ in range(runs):
-        for fn, out in ((fn_a, a_s), (fn_b, b_s)):
-            spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).collect()
-            out.append(time.perf_counter() - t0)
-    return statistics.median(a_s), statistics.median(b_s)
+def _interleaved_cold(spark, fn_a, fn_b, sf_dir):
+    """Median-of-RUNS cold for BOTH shapes, measured interleaved in
+    ABBA order after one untimed codegen warm-up each. This host shows
+    intermittent multi-minute contention phases that moved identical
+    code 2-4x between back-to-back runs (BENCH_NOTES r11);
+    interleaving puts both shapes inside the same phases so the
+    COMPARISON stays valid even when the absolutes drift."""
+    r = bench.interleave(
+        lambda: fn_a(spark, sf_dir).collect(),
+        lambda: fn_b(spark, sf_dir).collect(),
+        RUNS,
+        1,
+        before=spark.catalog.clearCache,
+    )
+    return statistics.median(r["a"]), statistics.median(r["b"])
 
 
 def main() -> None:
     spark = get_spark("cba-crossover", master="local[32]")
     spark.sparkContext.setLogLevel("ERROR")
-    dirs = {m: _replicate_docs(spark, m) for m in MULTS}
-
-    odirs = {m: _replicate_orders(spark, m) for m in MULTS}
+    dirs = {m: _replicate(spark, "documents", "doc_id", m) for m in MULTS}
+    odirs = {m: _replicate(spark, "orders", "o_orderkey", m) for m in MULTS}
 
     pairs = {
         "ccnet_quality_buckets": (

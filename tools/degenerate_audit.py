@@ -36,6 +36,8 @@ sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
+import bench  # noqa: E402
+
 TABLES = (
     "region nation customer supplier part orders lineitem "
     "events documents embeddings"
@@ -43,12 +45,15 @@ TABLES = (
 
 
 def _derive(spark, src: str, out: str, shape: str) -> str:
+    """Build (or reuse) the ``shape`` variant of every table under ``out``."""
+    return bench._build_once(
+        out, f"{src}|{shape}", lambda: _write_shape(spark, src, out, shape)
+    )
+
+
+def _write_shape(spark, src: str, out: str, shape: str) -> None:
     from comperhensive_bigdata_analysis__spark.sources.tables import load_table
 
-    marker = os.path.join(out, "_MARKER")
-    want = f"{src}|{shape}"
-    if os.path.exists(marker) and open(marker).read() == want:
-        return out
     for t in TABLES:
         df = load_table(spark, src, t)
         if shape == "empty":
@@ -90,9 +95,6 @@ def _derive(spark, src: str, out: str, shape: str) -> str:
         else:
             raise SystemExit(f"unknown shape {shape!r}")
         df.coalesce(1).write.mode("overwrite").parquet(f"{out}/{t}.parquet")
-    with open(marker, "w") as f:
-        f.write(want)
-    return out
 
 
 def audit(spark, data_dir: str, shape: str) -> list[tuple[str, str]]:

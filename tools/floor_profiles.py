@@ -31,24 +31,15 @@ from __future__ import annotations
 import os
 import statistics
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
+import bench  # noqa: E402
+from scale_audit import explain_text  # noqa: E402
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def _med(act, runs=5):
-    act()  # untimed warm-up, bench protocol
-    s = []
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        act()
-        s.append(time.perf_counter() - t0)
-    return statistics.median(s)
 
 
 def profile_q24(spark) -> None:
@@ -81,9 +72,9 @@ def profile_q24(spark) -> None:
 
     full = plans.QUERIES["dsir_importance_weights"]
     full(spark, SF).collect()  # session warm-up
-    s1 = _med(lambda: hashed().count())
-    s2 = _med(lambda: tf3().count())
-    s3 = _med(lambda: full(spark, SF).collect())
+    s1 = bench._median_time(lambda: hashed().count(), 5)
+    s2 = bench._median_time(lambda: tf3().count(), 5)
+    s3 = bench._median_time(lambda: full(spark, SF).collect(), 5)
     print(
         f"q24 decomposition warm median-of-5: hashed.count {s1:.3f}s, "
         f"tf3.count {s2:.3f}s, full plan {s3:.3f}s "
@@ -119,10 +110,7 @@ def profile_q25(spark) -> None:
     n1 = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
     run(wrapper)
     n2 = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-    second = q(spark, SF)
-    plan_str = second._sc._jvm.PythonSQLUtils.explainString(
-        second._jdf.queryExecution(), "simple"
-    )
+    plan_str = explain_text(q(spark, SF))
     print(
         f"q25 cached RDDs run1={n1} run2={n2} "
         f"({'deduped' if n2 == n1 else 'NOT deduped — plan drift!'}); "
@@ -130,30 +118,19 @@ def profile_q25(spark) -> None:
     )
 
     # wrapper-vs-bare, warm (the bench protocol) then cold
-    run(wrapper)
-    run(bare)
-    w_s, b_s = [], []
-    for _ in range(7):
-        for variant, out in ((wrapper, w_s), (bare, b_s)):
-            t0 = time.perf_counter()
-            run(variant)
-            out.append(time.perf_counter() - t0)
+    warm = bench.interleave(lambda: run(wrapper), lambda: run(bare), 7, 1)
     print(
         f"q25 warm interleaved median-of-7: wrapper "
-        f"{statistics.median(w_s):.3f}s vs bare persist "
-        f"{statistics.median(b_s):.3f}s (r12: 0.859 vs 0.808)"
+        f"{statistics.median(warm['a']):.3f}s vs bare persist "
+        f"{statistics.median(warm['b']):.3f}s (r12: 0.859 vs 0.808)"
     )
-    c_w, c_b = [], []
-    for _ in range(5):
-        for variant, out in ((wrapper, c_w), (bare, c_b)):
-            reset()
-            t0 = time.perf_counter()
-            run(variant)
-            out.append(time.perf_counter() - t0)
+    cold = bench.interleave(
+        lambda: run(wrapper), lambda: run(bare), 5, 0, before=reset
+    )
     print(
         f"q25 cold interleaved median-of-5: wrapper "
-        f"{statistics.median(c_w):.3f}s vs bare persist "
-        f"{statistics.median(c_b):.3f}s (r12: 1.573 vs 1.498)"
+        f"{statistics.median(cold['a']):.3f}s vs bare persist "
+        f"{statistics.median(cold['b']):.3f}s (r12: 1.573 vs 1.498)"
     )
     reset()
 

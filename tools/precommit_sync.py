@@ -8,7 +8,8 @@ drift in place:
 
   1. README.md "N named plans"   -> regex bump (instant)
   2. SCALE_AUDIT.md totals line  -> rerun tools/scale_audit.py if the
-     plan count drifted (one local[8] Spark session, ~40 s)
+     plan count drifted (one local[8] Spark session, ~40 s; the same
+     pass rewrites PLANS.md, which is staged with it)
   3. CORRECTNESS_FULL.json       -> targeted tools/correctness_sweep.py
      merge for up to MAX_SWEEP missing plans (sf0.01 gate); more than
      that, or extra/stale rows, prints a loud warning instead.
@@ -73,6 +74,7 @@ def main() -> None:
               "SKIP_PLAN_SYNC=1 to skip)", flush=True)
         if _run([sys.executable, "tools/scale_audit.py"]):
             _git_add("SCALE_AUDIT.md")
+            _git_add("PLANS.md")
         else:
             print("precommit_sync: WARNING — scale_audit.py failed; "
                   "SCALE_AUDIT.md still stale")

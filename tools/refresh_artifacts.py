@@ -6,7 +6,7 @@ committed artifacts can't drift from the registry:
 
 Steps:
   1. tools/correctness_sweep.py  -> CORRECTNESS_FULL.json (sf0.01 gate)
-  2. tools/scale_audit.py        -> SCALE_AUDIT.md physical ledger
+  2. tools/scale_audit.py        -> SCALE_AUDIT.md physical ledger + PLANS.md
   3. README.md "N named plans" line updated to len(plans.QUERIES)
   4. pytest tests/test_docs_counts.py tests/test_correctness_full.py
 

@@ -17,7 +17,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 import urllib.request
 
 # The planted-skew section records PER-TASK skew (max/p50 task runtime
@@ -28,6 +27,7 @@ os.environ.setdefault("SPARK_UI", "true")
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import bench  # noqa: E402
 from comperhensive_bigdata_analysis__spark import plans  # noqa: E402
 from comperhensive_bigdata_analysis__spark.session import get_spark  # noqa: E402
 from comperhensive_bigdata_analysis__spark.sources.inflate import (  # noqa: E402
@@ -53,28 +53,11 @@ PROBES = {
 }
 
 
-def _minhash_k64(spark, sf_dir):
-    """The K=64/16-band production dedup tier (VERDICT r2 ask #5) —
-    same callable shape as bench.py's q15 headliner."""
-    from comperhensive_bigdata_analysis__spark.operators.dedup import (
-        MINHASH_BANDS_PROD,
-        MINHASH_K_PROD,
-        minhash_lsh_pairs,
-    )
-
-    d = load_table(spark, sf_dir, "documents")
-    return minhash_lsh_pairs(
-        d, "doc_id", "text", n=3,
-        k=MINHASH_K_PROD, bands=MINHASH_BANDS_PROD,
-        min_est=0.25, hash_fn="xxhash64",
-    )
-
-
 #: Dedup-family probes (VERDICT r2 ask #5): not plain registry lookups —
 #: minhash runs the production-parameter tier; contamination comes from
 #: the registry but is listed here so the probe set is explicit.
 EXTRA_PROBES: dict = {
-    "minhash_lsh_dedup[K=64]": _minhash_k64,
+    "minhash_lsh_dedup[K=64]": bench._minhash_k64,
 }
 
 #: Round-3 additions probed straight from the registry: the PQ
@@ -150,40 +133,45 @@ for _name in (
 ):
     EXTRA_PROBES[_name] = plans.QUERIES[_name]
 
-def _time(fn, spark, sf_dir) -> float:
-    # Single warm-ish measurement: the probe compares GROWTH between two
-    # corpus sizes of the same plan in the same JVM, so constant session
-    # overhead cancels; best-of-N would double a multi-minute run for
-    # second-digit precision the ratio doesn't need.
-    # Cold-cache discipline (r10): the census-shaped dedup plans lazily
-    # persist their shingle/fingerprint frame, so a timed run after a
-    # warm-up would measure cache READS only — clearing the cache makes
-    # every timed run pay materialization (scan + cache write + both
-    # consumers), which is the cost a fresh corpus pass pays. No-op for
-    # plans that cache nothing.
-    spark.catalog.clearCache()
-    t0 = time.perf_counter()
-    fn(spark, sf_dir).collect()
-    return time.perf_counter() - t0
-
-
-def _ensure_corpus(spark, base: str, out: str, copies: int) -> None:
-    """Marker-keyed reuse (same contract as bench.py's _scale_dir):
-    re-running the probe must not rebuild identical corpora."""
-    marker = os.path.join(out, "_MARKER")
-    want = f"{base}|{copies}"
-    if os.path.exists(marker) and open(marker).read() == want:
-        return
-    inflate_corpus(spark, base, out, copies)
-    with open(marker, "w") as f:
-        f.write(want)
+def _growth(spark, fn, dir_1x: str, dir_nx: str) -> tuple[float, float, float]:
+    """(1x s, Nx s, Nx/1x ratio): one cold run on each corpus after an
+    untimed 1x warm-up. Whole-stage-codegen compilation (~1s) is paid
+    on a plan's FIRST execution and cached after — without the warm-up,
+    any sub-second plan shows a bogus <1x ratio because the 1x run
+    pays the compile and the Nx run doesn't.
+    Single warm-ish measurement: the probe compares GROWTH between two
+    corpus sizes of the same plan in the same JVM, so constant session
+    overhead cancels; best-of-N would double a multi-minute run for
+    second-digit precision the ratio doesn't need.
+    Cold-cache discipline (r10): the census-shaped dedup plans lazily
+    persist their shingle/fingerprint frame, so a timed run after a
+    warm-up would measure cache READS only — clearing the cache before
+    each timed run makes it pay materialization (scan + cache write +
+    both consumers), which is the cost a fresh corpus pass pays. No-op
+    for plans that cache nothing."""
+    fn(spark, dir_1x).collect()
+    r = bench.interleave(
+        lambda: fn(spark, dir_1x).collect(),
+        lambda: fn(spark, dir_nx).collect(),
+        1,
+        0,
+        before=spark.catalog.clearCache,
+    )
+    base, big = r["a"][0], r["b"][0]
+    return base, big, (big / base if base else float("inf"))
 
 
 def main() -> None:
     spark = get_spark("cba-scale-probe", master="local[32]")
     spark.sparkContext.setLogLevel("ERROR")
-    _ensure_corpus(spark, BASE, OUT_1X, 1)
-    _ensure_corpus(spark, BASE, OUT_NX, COPIES)
+    # Marker-keyed reuse: re-running the probe must not rebuild
+    # identical corpora.
+    for out, copies in ((OUT_1X, 1), (OUT_NX, COPIES)):
+        bench._build_once(
+            out,
+            f"{BASE}|{copies}",
+            lambda: inflate_corpus(spark, BASE, out, copies),
+        )
     # Planted corpora are built HERE too (r11 fix): building the
     # 10M-doc doc-skew corpus inside the TIMED session bloated its
     # heap/GC state and taxed the first planted rows (exact_substr
@@ -196,12 +184,9 @@ def main() -> None:
     )
 
     for base, out in ((OUT_1X, SKEW_1X), (OUT_NX, SKEW_NX)):
-        marker = os.path.join(out, "_MARKER")
-        want = f"{base}|skew"
-        if not (os.path.exists(marker) and open(marker).read() == want):
-            plant_skew_corpus(spark, base, out)
-            with open(marker, "w") as f:
-                f.write(want)
+        bench._build_once(
+            out, f"{base}|skew", lambda: plant_skew_corpus(spark, base, out)
+        )
 
     # Doc-count-scaled planted corpus (VERDICT r10 ask #2 + #4): 256x
     # the docs at ~8-20 chars each, a single-value boilerplate
@@ -213,12 +198,11 @@ def main() -> None:
     # row per doc), while the production census / distributed_scan
     # shapes stay balanced.
     for base, out in ((OUT_1X, DOCSKEW_1X), (OUT_NX, DOCSKEW_NX)):
-        marker = os.path.join(out, "_MARKER")
-        want = f"{base}|docskew{DOC_SKEW_VERSION}"
-        if not (os.path.exists(marker) and open(marker).read() == want):
-            plant_doc_skew_corpus(spark, base, out)
-            with open(marker, "w") as f:
-                f.write(want)
+        bench._build_once(
+            out,
+            f"{base}|docskew{DOC_SKEW_VERSION}",
+            lambda: plant_doc_skew_corpus(spark, base, out),
+        )
     # Time in a FRESH JVM session: the one that just wrote the inflated
     # corpora carries bloated heap/GC state that taxed the first timed
     # row by ~2x (measured on copurchase_triangles: 58-77s in-sequence
@@ -233,14 +217,7 @@ def main() -> None:
 
     rows = []
     for name, fn in probes.items():
-        # Untimed warm-up: whole-stage-codegen compilation (~1s) is paid
-        # on a plan's FIRST execution and cached after — without this,
-        # any sub-second plan shows a bogus <1x ratio because the 1x run
-        # pays the compile and the 8x run doesn't.
-        fn(spark, OUT_1X).collect()
-        base_s = _time(fn, spark, OUT_1X)
-        big_s = _time(fn, spark, OUT_NX)
-        ratio = big_s / base_s if base_s else float("inf")
+        base_s, big_s, ratio = _growth(spark, fn, OUT_1X, OUT_NX)
         rows.append((name, base_s, big_s, ratio))
         print(f"{name:28s} base={base_s:7.2f}s x{COPIES}={big_s:7.2f}s "
               f"ratio={ratio:5.2f} (linear would be <= {COPIES})")
@@ -257,10 +234,7 @@ def main() -> None:
     )
 
     fixed = lambda s, d: lsh_pairs_at(s, d, bits_per_band=BITS_PER_BAND)  # noqa: E731
-    fixed(spark, OUT_1X).collect()  # codegen warm-up
-    fixed_base = _time(fixed, spark, OUT_1X)
-    fixed_big = _time(fixed, spark, OUT_NX)
-    fixed_ratio = fixed_big / fixed_base
+    fixed_base, fixed_big, fixed_ratio = _growth(spark, fixed, OUT_1X, OUT_NX)
     control_names = set()  # rows excluded from the pass/fail line
     control_names.add(f"lsh_band_pairs[fixed {BITS_PER_BAND}-bit bands]")
     rows.append(
@@ -282,10 +256,7 @@ def main() -> None:
     )
 
     uncapped = lambda s, d: winnowing_pairs_at(s, d, max_df=None)  # noqa: E731
-    uncapped(spark, OUT_1X).collect()  # codegen warm-up
-    un_base = _time(uncapped, spark, OUT_1X)
-    un_big = _time(uncapped, spark, OUT_NX)
-    un_ratio = un_big / un_base
+    un_base, un_big, un_ratio = _growth(spark, uncapped, OUT_1X, OUT_NX)
     control_names.add("winnowing_fingerprint_pairs[uncapped]")
     rows.append(
         ("winnowing_fingerprint_pairs[uncapped]", un_base, un_big, un_ratio)
@@ -314,10 +285,9 @@ def main() -> None:
             .agg(F.count(F.lit(1)).alias("n"))
         )
 
-    _ntile_global_window(spark, OUT_1X).collect()  # codegen warm-up
-    gw_base = _time(_ntile_global_window, spark, OUT_1X)
-    gw_big = _time(_ntile_global_window, spark, OUT_NX)
-    gw_ratio = gw_big / gw_base
+    gw_base, gw_big, gw_ratio = _growth(
+        spark, _ntile_global_window, OUT_1X, OUT_NX
+    )
     control_names.add("ntile_price_quartiles[global-window]")
     rows.append(
         ("ntile_price_quartiles[global-window]", gw_base, gw_big, gw_ratio)
@@ -367,36 +337,7 @@ def main() -> None:
     # (PARTITION BY lang ...) with no rank filter, so no
     # WindowGroupLimit prune and the hot language's entire census
     # sorts in ONE task. Output identical to the production plan.
-    from comperhensive_bigdata_analysis__spark.plans.training import (
-        unigram_lm_surprisal,
-    )
-    from pyspark.sql.window import Window as _W
-
-    def _ccnet_window_control(s, d):
-        sur = unigram_lm_surprisal(s, d)
-        docs = load_table(s, d, "documents").select("doc_id", "lang")
-        w = _W.partitionBy("lang").orderBy("avg_surprisal", "doc_id")
-        b = sur.join(docs, "doc_id").withColumn(
-            "bucket", F.ntile(3).over(w).cast("bigint")
-        )
-        return (
-            b.groupBy("lang", "bucket")
-            .agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-                F.sum("n_tokens").cast("bigint").alias("n_tokens"),
-                (
-                    F.floor(
-                        F.sum(
-                            F.col("avg_surprisal").cast("decimal(28,12)")
-                        ).cast("double")
-                        / F.count(F.lit(1))
-                        * 1e6
-                    )
-                    / 1e6
-                ).alias("mean_surprisal"),
-            )
-            .orderBy("lang", "bucket")
-        )
+    from crossover_matrix import _ccnet_window
 
     # The df-cap test ISOLATED from the pair stage (VERDICT r10 ask #2
     # follow-through): in the full winnowing plan the pair explode
@@ -465,7 +406,7 @@ def main() -> None:
          plans.QUERIES["ccnet_quality_buckets"], False,
          DOCSKEW_1X, DOCSKEW_NX),
         ("ccnet_quality_buckets[window-shape lang-skew]",
-         _ccnet_window_control, True, DOCSKEW_1X, DOCSKEW_NX),
+         _ccnet_window, True, DOCSKEW_1X, DOCSKEW_NX),
         # the isolated df-cap stage (see _win_df_survivors comment)
         ("winnow_df_filter[doc-skew]", _win_df_survivors("census"), False,
          DOCSKEW_1X, DOCSKEW_NX),
@@ -560,10 +501,7 @@ def main() -> None:
 
     skew_tasks = []
     for name, fn, is_control, dir_1x, dir_nx in skew_probes:
-        fn(spark, dir_1x).collect()  # codegen warm-up
-        b = _time(fn, spark, dir_1x)
-        g = _time(fn, spark, dir_nx)
-        r = g / b if b else float("inf")
+        b, g, r = _growth(spark, fn, dir_1x, dir_nx)
         rows.append((name, b, g, r))
         if is_control:
             control_names.add(name)
